@@ -80,6 +80,11 @@ object OsmPipeline {
   /** Full ETL: XML path → 5 DataFrames. `strict = true` reproduces the
     * reference's crash-on-dirty semantics (F1 KeyError / F4 AttributeError)
     * via raise_error; default is lenient pass-through (SURVEY.md §7.4).
+    * `splittable = true` scans with OsmSplittable instead of the stock XML
+    * source: Hadoop splits over one file, each element decoded straight
+    * from its bytes by XmlElementDecoder (no per-element XML parser), to
+    * the same rows; a malformed element fails the job with its file and
+    * byte offset. Both scans run once per table without `cache`.
     */
   def process(spark: SparkSession, path: String, strict: Boolean = false,
       cache: Boolean = false, splittable: Boolean = false): OsmTables = {
@@ -87,7 +92,9 @@ object OsmPipeline {
     // Step_2:320-332): persist the two raw scans so the five table
     // pipelines share them instead of re-parsing the XML five times.
     // splittable = scan via XmlElementInputFormat (OsmSplittable): use for
-    // a SINGLE monolithic file, where the stock XML source is one task.
+    // a SINGLE monolithic file, where the stock XML source is one task;
+    // compressed or hand-edited XML (comments/CDATA holding a row tag)
+    // needs the stock source.
     val nodesRaw0 =
       if (splittable) OsmSplittable.readNodesRaw(spark, path)
       else readNodesRaw(spark, path)

@@ -1,9 +1,6 @@
 package graft.osm
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.io.{LongWritable, Text}
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, GraftPlanBridge, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Splittable scan of a SINGLE monolithic .osm file — the in-place
@@ -13,9 +10,12 @@ import org.apache.spark.sql.types.StructType
   * a 100 GB .osm is one task. XmlElementInputFormat fixes that at the
   * source tier — each Hadoop split scans forward to the first element
   * start tag it owns and reads elements (through the split end for the
-  * last one) with O(one element) memory; from_xml then parses each element
-  * against the same explicit schemas as the stock scans, so everything
-  * downstream (the 5-table pipeline, cleaning, audits) is unchanged.
+  * last one) with O(one element) memory; XmlElementDecoder then turns each
+  * element's bytes straight into a row of the same explicit schemas as the
+  * stock scans (root attributes and same-named children's attributes, cast
+  * with the XML source's rules), so everything downstream (the 5-table
+  * pipeline, cleaning, audits) is unchanged. A malformed element fails the
+  * read, naming the file and its byte offset.
   */
 object OsmSplittable {
 
@@ -25,18 +25,15 @@ object OsmSplittable {
     */
   def readElements(spark: SparkSession, path: String, rowTag: String,
       schema: StructType, maxSplitBytes: Option[Long] = None): DataFrame = {
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    conf.set(XmlElementInputFormat.ROW_TAG_KEY, rowTag)
-    maxSplitBytes.foreach { b =>
-      conf.set("mapreduce.input.fileinputformat.split.maxsize", b.toString)
+    val rows = XmlElementInputFormat.readElements(spark.sparkContext, path, rowTag,
+        maxSplitBytes) { (file, elements) =>
+      val decoder = new XmlElementDecoder(schema)
+      val fileName = file.toString
+      elements.map { case (offset, bytes) =>
+        decoder.decode(bytes.getBytes, bytes.getLength, fileName, offset.get)
+      }
     }
-    val records = spark.sparkContext
-      .newAPIHadoopFile(path, classOf[XmlElementInputFormat],
-        classOf[LongWritable], classOf[Text], conf)
-      .map(_._2.toString)
-    spark.createDataset(records)(Encoders.STRING)
-      .select(from_xml(col("value"), schema).as("e"))
-      .select(col("e.*"))
+    GraftPlanBridge.ofInternalRows(spark, rows, schema)
   }
 
   /** Drop-in splittable variants of the stock scans. */

@@ -2,11 +2,16 @@ package graft.osm
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.Path
-import org.apache.hadoop.io.{DataOutputBuffer, LongWritable, Text}
+import scala.reflect.ClassTag
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FSDataInputStream, Path}
+import org.apache.hadoop.io.{LongWritable, Text}
 import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.hadoop.mapreduce.{InputSplit, JobContext, RecordReader, TaskAttemptContext}
 import org.apache.hadoop.mapreduce.lib.input.{FileInputFormat, FileSplit}
+import org.apache.spark.SparkContext
+import org.apache.spark.rdd.{NewHadoopRDD, RDD}
 
 /** Splittable XML-element input format: one record per `<rowTag ...>`
   * element, from a SINGLE (possibly huge) uncompressed XML file.
@@ -43,19 +48,48 @@ class XmlElementInputFormat extends FileInputFormat[LongWritable, Text] {
 object XmlElementInputFormat {
   /** Configuration key naming the element to extract (e.g. "node"). */
   val ROW_TAG_KEY = "graft.xml.rowtag"
+
+  /** Every `rowTag` element under `path`, decoded split by split: `decode`
+    * gets the split's file and an iterator of (byte offset of the element's
+    * start tag, element bytes). The Text is reused between records — read
+    * or copy it before advancing. `maxSplitBytes` bounds the Hadoop split
+    * size (else the default block sizing applies — on a real cluster, the
+    * HDFS/object-store block size).
+    */
+  def readElements[T: ClassTag](sc: SparkContext, path: String, rowTag: String,
+      maxSplitBytes: Option[Long] = None)(
+      decode: (Path, Iterator[(LongWritable, Text)]) => Iterator[T]): RDD[T] = {
+    val conf = new Configuration(sc.hadoopConfiguration)
+    conf.set(ROW_TAG_KEY, rowTag)
+    maxSplitBytes.foreach(b => conf.set(FileInputFormat.SPLIT_MAXSIZE, b.toString))
+    sc.newAPIHadoopFile(path, classOf[XmlElementInputFormat],
+        classOf[LongWritable], classOf[Text], conf)
+      .asInstanceOf[NewHadoopRDD[LongWritable, Text]]
+      .mapPartitionsWithInputSplit((split, it) =>
+        decode(split.asInstanceOf[FileSplit].getPath, it))
+  }
 }
 
+/** Reads through a plain byte window over the file stream (no per-byte
+  * synchronized stream calls) and copies each element into the reused
+  * value Text in runs: the bytes of the current window from `runStart` on
+  * belong to the element being recorded and are appended in one copy when
+  * the window refills or the element ends.
+  */
 class XmlElementRecordReader extends RecordReader[LongWritable, Text] {
   private var startTag: Array[Byte] = _
   private var endTag: Array[Byte] = _
   private var start = 0L
   private var end = 0L
-  private var pos = 0L
-  private var in: java.io.DataInputStream = _
-  private var fsIn: org.apache.hadoop.fs.FSDataInputStream = _
+  private var fsIn: FSDataInputStream = _
+  private val window = new Array[Byte](64 * 1024)
+  private var windowPos = 0      // next unread byte of `window`
+  private var windowLen = 0      // valid bytes in `window`
+  private var windowFileStart = 0L // file offset of window(0)
+  private var recording = false
+  private var runStart = 0       // first window byte not yet copied to `value`
   private val key = new LongWritable
   private val value = new Text
-  private val buffer = new DataOutputBuffer
 
   override def initialize(genericSplit: InputSplit, ctx: TaskAttemptContext): Unit = {
     val split = genericSplit.asInstanceOf[FileSplit]
@@ -76,42 +110,56 @@ class XmlElementRecordReader extends RecordReader[LongWritable, Text] {
     val fs = split.getPath.getFileSystem(ctx.getConfiguration)
     fsIn = fs.open(split.getPath)
     fsIn.seek(start)
-    in = new java.io.DataInputStream(new java.io.BufferedInputStream(fsIn, 1 << 20))
-    pos = start
+    windowFileStart = start
   }
 
+  /** File offset of the next unread byte. */
+  private def pos: Long = windowFileStart + windowPos
+
   private def readByte(): Int = {
-    val b = in.read()
-    if (b >= 0) pos += 1
+    if (windowPos == windowLen && !refill()) return -1
+    val b = window(windowPos) & 0xff
+    windowPos += 1
     b
   }
 
-  /** Scan forward for `tag`; when `record` is true, copy scanned bytes into
-    * `buffer`. Returns false at EOF, or — when not recording — once the
-    * scan position passes the split end with no match in progress (the next
-    * element belongs to the next split). In non-recording (start-tag
-    * search) mode a match is accepted only if its FIRST byte lies before
-    * the split end: a start tag beginning at/after `end`, reached through
-    * a partial-match run crossing the boundary (e.g. "<nod<node"), is the
-    * next split's element — emitting it here would duplicate it.
+  /** Next window of the file, after saving the recorded run of this one. */
+  private def refill(): Boolean = {
+    if (recording) value.append(window, runStart, windowLen - runStart)
+    runStart = 0
+    val n = fsIn.read(window, 0, window.length)
+    if (n <= 0) return false
+    windowFileStart += windowLen
+    windowPos = 0
+    windowLen = n
+    true
+  }
+
+  /** Scan forward for `tag` (bytes are recorded when `recording`). Returns
+    * false at EOF, or — when not recording — once the scan position passes
+    * the split end with no match in progress (the next element belongs to
+    * the next split). In non-recording (start-tag search) mode a match is
+    * accepted only if its FIRST byte lies before the split end: a start tag
+    * beginning at/after `end`, reached through a partial-match run crossing
+    * the boundary (e.g. "<nod<node"), is the next split's element —
+    * emitting it here would duplicate it.
     */
-  private def readUntilMatch(tag: Array[Byte], record: Boolean): Boolean = {
+  private def readUntilMatch(tag: Array[Byte]): Boolean = {
     var i = 0
     var matchStart = 0L
     while (true) {
       val b = readByte()
       if (b == -1) return false
-      if (record) buffer.write(b)
       if (b == tag(i)) {
         if (i == 0) matchStart = pos - 1
         i += 1
         if (i >= tag.length) {
-          if (record || matchStart < end) return true
+          if (recording || matchStart < end) return true
           return false // tag begins in the next split: not ours
         }
       } else {
         if (b == tag(0)) { i = 1; matchStart = pos - 1 } else i = 0
-        if (!record && i == 0 && pos >= end) return false
+        if (!recording && i == 0 && pos >= end) return false
       }
     }
     false
@@ -125,14 +173,16 @@ class XmlElementRecordReader extends RecordReader[LongWritable, Text] {
 
   override def nextKeyValue(): Boolean = {
     while (true) {
-      buffer.reset()
-      if (!readUntilMatch(startTag, record = false)) return false
+      if (!readUntilMatch(startTag)) return false
       val elementStart = pos - startTag.length
       val b0 = readByte()
       if (b0 == -1) return false
       if (boundaryOk(b0)) {
-        buffer.write(startTag)
-        buffer.write(b0)
+        // record from b0 on (the byte just read, still in this window)
+        value.clear()
+        value.append(startTag, 0, startTag.length)
+        recording = true
+        runStart = windowPos - 1
         // phase 1: the root tag itself, quote-aware ('>' is legal inside
         // attribute values). Ends at '>' — "/>" completes the element.
         var rootClosed = b0 == '>'
@@ -142,7 +192,6 @@ class XmlElementRecordReader extends RecordReader[LongWritable, Text] {
         while (!rootClosed && !selfClosed) {
           val b = readByte()
           if (b == -1) return false // malformed tail: drop it
-          buffer.write(b)
           if (inQuote != 0) { if (b == inQuote) inQuote = 0 }
           else if (b == '"' || b == '\'') inQuote = b
           else if (b == '>') { if (prev == '/') selfClosed = true else rootClosed = true }
@@ -151,12 +200,12 @@ class XmlElementRecordReader extends RecordReader[LongWritable, Text] {
         // phase 2 (open element): copy bytes through the matching end tag.
         // Same-name elements do not nest and '<' is escaped in values, so a
         // raw end-tag byte match is the element end.
-        if (selfClosed || readUntilMatch(endTag, record = true)) {
-          key.set(elementStart)
-          value.set(buffer.getData, 0, buffer.getLength)
-          return true
-        }
-        return false // EOF inside an element: malformed tail, drop it
+        val complete = selfClosed || readUntilMatch(endTag)
+        recording = false
+        if (!complete) return false // EOF inside an element: malformed tail, drop it
+        value.append(window, runStart, windowPos - runStart)
+        key.set(elementStart)
+        return true
       }
       // not a real start tag (e.g. "<nodeset"): keep scanning, unless we
       // are already past the split end
@@ -169,5 +218,5 @@ class XmlElementRecordReader extends RecordReader[LongWritable, Text] {
   override def getCurrentValue: Text = value
   override def getProgress: Float =
     if (end == start) 1.0f else math.min(1.0f, (pos - start).toFloat / (end - start))
-  override def close(): Unit = if (in != null) in.close()
+  override def close(): Unit = if (fsIn != null) fsIn.close()
 }

@@ -1,8 +1,6 @@
 package graft.sources
 
 import graft.{Probe, Tables}
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.io.{LongWritable, Text}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -23,6 +21,19 @@ object Sitemap {
     "&lt;" -> "<", "&gt;" -> ">", "&quot;" -> "\"",
     "&#39;" -> "'", "&apos;" -> "'", "&amp;" -> "&")
 
+  /** One `elem` string per `rowTag` element under `path` (splittable). */
+  private def elements(spark: SparkSession, path: String, rowTag: String,
+      maxSplitBytes: Option[Long] = None): DataFrame = {
+    val rows = graft.osm.XmlElementInputFormat.readElements(spark.sparkContext, path, rowTag,
+        maxSplitBytes) { (_, records) =>
+      records.map { case (_, t) =>
+        Row(new String(t.getBytes, 0, t.getLength, java.nio.charset.StandardCharsets.UTF_8))
+      }
+    }
+    spark.createDataFrame(rows,
+      StructType(Seq(StructField("elem", StringType, nullable = false))))
+  }
+
   private def field(tag: String): Column => Column = elem =>
     regexp_extract(elem, s"(?s)<$tag>\\s*(.*?)\\s*</$tag>", 1)
 
@@ -38,26 +49,12 @@ object Sitemap {
     * Hadoop split size.
     */
   def readUrlEntries(spark: SparkSession, path: String,
-      maxSplitBytes: Option[Long] = None): DataFrame = {
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    conf.set(graft.osm.XmlElementInputFormat.ROW_TAG_KEY, "url")
-    maxSplitBytes.foreach { b =>
-      conf.set("mapreduce.input.fileinputformat.split.maxsize", b.toString)
-    }
-    val rows = spark.sparkContext
-      .newAPIHadoopFile(path, classOf[graft.osm.XmlElementInputFormat],
-        classOf[LongWritable], classOf[Text], conf)
-      .map { case (_, t) =>
-        Row(new String(t.copyBytes(), java.nio.charset.StandardCharsets.UTF_8))
-      }
-    val elems = spark.createDataFrame(rows,
-      StructType(Seq(StructField("elem", StringType, nullable = false))))
-    elems.select(
+      maxSplitBytes: Option[Long] = None): DataFrame =
+    elements(spark, path, "url", maxSplitBytes).select(
       decodeEntities(field("loc")(col("elem"))).as("loc"),
       field("lastmod")(col("elem")).as("lastmod"),
       field("changefreq")(col("elem")).as("changefreq"),
       field("priority")(col("elem")).as("priority"))
-  }
 
   /** X-URL7 — sitemap DISCOVERY composed with frontier canonicalization:
     * documents render as sitemap `<url>` entries (entity-escaped locs
@@ -290,21 +287,10 @@ object Sitemap {
     * actual sitemap files) — same splittable XML machinery, rowTag
     * `sitemap`: (loc, lastmod).
     */
-  def readIndexEntries(spark: SparkSession, path: String): DataFrame = {
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    conf.set(graft.osm.XmlElementInputFormat.ROW_TAG_KEY, "sitemap")
-    val rows = spark.sparkContext
-      .newAPIHadoopFile(path, classOf[graft.osm.XmlElementInputFormat],
-        classOf[LongWritable], classOf[Text], conf)
-      .map { case (_, t) =>
-        Row(new String(t.copyBytes(), java.nio.charset.StandardCharsets.UTF_8))
-      }
-    spark.createDataFrame(rows,
-        StructType(Seq(StructField("elem", StringType, nullable = false))))
-      .select(
-        decodeEntities(field("loc")(col("elem"))).as("loc"),
-        field("lastmod")(col("elem")).as("lastmod"))
-  }
+  def readIndexEntries(spark: SparkSession, path: String): DataFrame =
+    elements(spark, path, "sitemap").select(
+      decodeEntities(field("loc")(col("elem"))).as("loc"),
+      field("lastmod")(col("elem")).as("lastmod"))
 
   /** All `<url>` entries reachable THROUGH a sitemap index: read the
     * index, collect the member locs, scan them all in one splittable

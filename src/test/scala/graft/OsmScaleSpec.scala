@@ -2,6 +2,7 @@ package graft
 
 import graft.osm.OsmPipeline
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.col
 
 /** ETL at the reference's actual input scale (~100 MB XML for the real
@@ -122,9 +123,9 @@ class OsmScaleSpec extends SparkSuite {
     // finds no start tag and returns empty, and counts still agree
     val ways = graft.osm.OsmSplittable.readWaysRaw(spark, xml, split)
     assert(ways.count() == nWays)
-    assert(ways.select("_id").orderBy("_id").collect().map(_.getLong(0)).toSeq ==
-      OsmPipeline.readWaysRaw(spark, xml).select("_id").orderBy("_id")
-        .collect().map(_.getLong(0)).toSeq)
+    // whole rows, the nd arrays included
+    assert(ways.orderBy("_id").collect().map(_.toSeq).toSeq ==
+      OsmPipeline.readWaysRaw(spark, xml).orderBy("_id").collect().map(_.toSeq).toSeq)
 
     // the full 5-table ETL over the splittable scan == over the stock scan
     val ts = OsmPipeline.process(spark, xml, splittable = true)
@@ -162,6 +163,85 @@ class OsmScaleSpec extends SparkSuite {
         .select("_id").collect().map(_.getLong(0)).sorted.toSeq
       assert(got == (1L to 200L), s"splitBytes=$splitBytes: got ${got.length} ids")
     }
+  }
+
+  test("splittable XML source: decoded rows equal the stock scan on an edge fixture") {
+    val dir = Files.createTempDirectory("osm_split_decode").toString
+    val xml = s"$dir/edge.osm"
+    val w = Files.newBufferedWriter(Paths.get(xml), java.nio.charset.StandardCharsets.UTF_8)
+    w.write("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n<osm version=\"0.6\">\n")
+    // named, decimal and hex entities; literal tab, LF and CRLF (-> one
+    // space each); character references (kept, then trimmed at the ends);
+    // a comment between children
+    w.write(s"""  <node id="1" lat="30.5" lon="-97.5" user="a &amp; b &lt;c&gt; &quot;q&quot; &apos;s&apos;" uid="7" version="1" changeset="3" timestamp="2016-01-01T00:00:00Z">
+    <tag k="dec" v="&#65;&#66;&#x43;&#x1F600;&#233;"/>
+    <!-- a comment with <tag k="no" v="no"/> and a > inside -->
+    <tag k="ws" v="tab\tand\nnewline\r\ncrlf"/>
+    <tag k="charref" v="&#9;lead&#10;x&#32;"/>
+  </node>
+""")
+    // surrounding spaces (trimmed), single quotes, '>' and '"' inside a
+    // value, spaces around '=', signs, an open-and-closed <tag></tag>, an
+    // empty value, a child without attributes and one missing v
+    w.write("""  <node id=" 3 " lat=' 30.25 ' lon='-97.25' user="  padded  " uid = "8" version='2' changeset="+4" timestamp="x>y">
+    <tag k='single' v='it"s > fine'></tag>
+    <tag k="empty" v=""/>
+    <tag/>
+    <tag k="onlyk"/>
+  </node>
+""")
+    // missing attributes and no children; multi-byte UTF-8; a <tag> below
+    // another child (not a direct child: ignored) and one with text
+    w.write("""  <node id="4" lat="1.0"/>
+  <node id="5" lat="2" lon="1,234.5" user="Ñandú 北京 😀" version="" uid="-9" changeset="0" timestamp=""><tag k="name" v="Łódź"/></node>
+  <node id="6" lat="1e3" lon="-0.5" user="x"><foo><tag k="deep" v="deep"/></foo><tag k="top" v="top">text</tag></node>
+  <way id="10" user="w" uid="1" version="1" changeset="1" timestamp="t">
+    <nd ref="1"/>
+    <!-- <nd ref="999"/> -->
+    <nd ref=" 3 "/>
+    <tag k="highway" v="a&amp;b"/>
+    <nd ref="5"></nd>
+  </way>
+  <way id="11"/>
+</osm>
+""")
+    w.close()
+
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("_id").collect().map(_.toSeq).toSeq
+    val stockNodes = rows(OsmPipeline.readNodesRaw(spark, xml))
+    val stockWays = rows(OsmPipeline.readWaysRaw(spark, xml))
+    // the fixture exercises what it claims (as the stock source reads it)
+    assert(stockNodes.map(_.head) == Seq(1L, 3L, 4L, 5L, 6L))
+    assert(stockNodes(1)(3) == "padded")
+    assert(stockNodes(2)(8) == null) // no children: null, not empty
+    assert(stockWays.map(_.last) == Seq(Seq(Row(1L), Row(3L), Row(5L)), null))
+    for (split <- Seq(None, Some(64L))) {
+      assert(rows(graft.osm.OsmSplittable.readNodesRaw(spark, xml, split)) == stockNodes,
+        s"nodes, split $split")
+      assert(rows(graft.osm.OsmSplittable.readWaysRaw(spark, xml, split)) == stockWays,
+        s"ways, split $split")
+    }
+  }
+
+  test("a malformed element fails the read on both paths, naming file and offset") {
+    val dir = Files.createTempDirectory("osm_split_bad").toString
+    val xml = s"$dir/bad.osm"
+    val good = """<osm version="0.6">
+  <node id="1" lat="30.1" lon="-97.1" version="1" timestamp="2016-01-01T00:00:00Z" changeset="1" uid="1" user="u"/>
+  """
+    val bad = """<node id="2" lat="abc" uid="x" lon="-97.2" version="1" timestamp="2016-01-01T00:00:00Z" changeset="1" user="u"/>"""
+    Files.write(Paths.get(xml), (good + bad + "\n</osm>\n").getBytes("UTF-8"))
+    def messages(e: Throwable): String =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.toString).mkString("\n")
+
+    // the stock XML source fails the read (a row of nulls would slip
+    // through to `nodes` with a null id)
+    intercept[Exception](OsmPipeline.readNodesRaw(spark, xml).collect())
+    val e = intercept[Exception](graft.osm.OsmSplittable.readNodesRaw(spark, xml).collect())
+    val msg = messages(e)
+    assert(msg.contains(s"malformed XML element at byte ${good.length} of "), msg)
+    assert(msg.contains(xml), msg)
   }
 
   test("full pipeline over a reference-scale XML input") {
