@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import scala.jdk.CollectionConverters._
-
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line with per-query wall seconds.
   *
@@ -13,21 +10,7 @@ import scala.jdk.CollectionConverters._
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // 50+ distinct queries x several codegen stages each blow through the
-      // default 100-entry generated-class cache -> recompiles mid-suite.
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      // session-build-time, not read-time (ADVICE r5): a NANOS-encoded
-      // events file must be readable from the first scan; Tables still
-      // sets it defensively for sessions built elsewhere.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session()
     // ERROR, not WARN: per-query function registration logs one WARN line
     // each, and at 109 queries those lines crowd the driver's bounded
     // stdout-tail capture that must end with our bare JSON result line.
@@ -63,13 +46,13 @@ object Bench {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
       System.gc()
       Thread.sleep(200)
-      val times = (1 to repeat).flatMap { rep =>
+      val times = (1 to repeat).flatMap { _ =>
         // drop cached plan fragments (the dedup probes persist() their
         // signature subtrees) so every repeat pays the full pipeline —
         // otherwise repeats 2..N would time a cache read, not the query.
         spark.catalog.clearCache()
         val t0 = System.nanoTime()
-        val r = try {
+        try {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           Some((System.nanoTime() - t0) / 1e9)
         } catch {
@@ -77,29 +60,6 @@ object Bench {
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
             None // a fast failure must not be reported as a fast query
         }
-        // suite-state forensics (round-13 verdict #2: in-suite repeats
-        // of untouched queries exploded 30× within one JVM while the
-        // isolated runs stayed flat): SPARK_GRAFT_BENCH_DIAG=1 logs,
-        // per repeat, everything a 265-query JVM could be accumulating
-        // — persisted RDDs, block-manager storage, heap, metaspace,
-        // loaded classes, broadcast count — so a drift correlates to
-        // ONE counter instead of vibes
-        if (sys.env.contains("SPARK_GRAFT_BENCH_DIAG")) {
-          val sc = spark.sparkContext
-          val rdds = sc.getPersistentRDDs.size
-          val sm = java.lang.management.ManagementFactory.getMemoryMXBean
-          val heapMb = sm.getHeapMemoryUsage.getUsed / 1048576
-          val meta = java.lang.management.ManagementFactory.getMemoryPoolMXBeans
-            .asScala.find(_.getName.contains("Metaspace"))
-            .map(_.getUsage.getUsed / 1048576).getOrElse(-1L)
-          val classes =
-            java.lang.management.ManagementFactory.getClassLoadingMXBean.getLoadedClassCount
-          val storage = sc.getExecutorMemoryStatus.values
-            .map { case (max, free) => max - free }.sum / 1048576
-          System.err.println(f"[diag] $name rep=$rep t=${r.getOrElse(-1.0)}%.2f " +
-            f"rdds=$rdds storageMb=$storage heapMb=$heapMb metaMb=$meta classes=$classes")
-        }
-        r
       }
       // (min, first, all): min is steady-state; first additionally carries
       // JIT / codegen-compile / cache-build cost. Reporting both stops

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 /** SparkSessionExtensions entry point: registers graft's native functions
   * so `spark.sql("SELECT rolling_hash(text) ...")` works cluster-wide.
   *
-  * Use: SparkSession.builder().withExtensions(new GraftExtensions), or
+  * Use: `.withExtensions(new GraftExtensions)` on a session builder, or
   * spark.sql.extensions=graft.GraftExtensions, or
   * GraftExtensions.register(spark) on a live session.
   */

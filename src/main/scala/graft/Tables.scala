@@ -20,11 +20,11 @@ object Tables {
     * it — tokenize, shingle, regex-extract, hash, decode — runs as ONE
     * task regardless of core count (measured: the whole link-extraction
     * chain single-threaded at local[32]). A round-robin repartition to
-    * `spark.graft.scan.minPartitions` (default: the cluster's
-    * defaultParallelism) spreads the map work; rows are unchanged, and
-    * every declared aggregation is order-independent by the repo's
-    * oracle-exactness discipline (integer/decimal sums, min/max, hash
-    * keys — re-proven against the DuckDB oracle after this change).
+    * the cluster's defaultParallelism spreads the map work; rows are
+    * unchanged, and every declared aggregation is order-independent by
+    * the repo's oracle-exactness discipline (integer/decimal sums,
+    * min/max, hash keys — re-proven against the DuckDB oracle after this
+    * change).
     *
     * OPT-IN per call site, not blanket: the exchange + extra stage cost
     * a measured ~0.2 s fixed at local[32], which only pays where the
@@ -47,33 +47,33 @@ object Tables {
     * (binary codec fixtures, persisted indexes) rather than a named
     * testdata table.
     *
-    * The partition probe reads the relation's FILE INDEX (already listed
-    * when the read was created) and replays Spark's own split packing —
-    * it never builds the frame's RDD lineage, which would run physical
-    * planning + codegen prep a second time per spread call (driver-side
-    * work that compounds on a 100 TB catalog with thousands of files;
-    * guide §5). Parity with the RDD probe is pinned by PlanAuditSpec.
+    * For a file scan the partition probe reads the relation's FILE INDEX
+    * (already listed when the read was created) and replays Spark's own
+    * split packing — it never builds the frame's RDD lineage, which would
+    * run physical planning + codegen prep a second time per spread call
+    * (driver-side work that compounds on a 100 TB catalog with thousands
+    * of files; guide §5). Parity with the RDD probe is pinned by
+    * TablesSpec.
     */
   def spreadDf(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val target = spark.conf.getOption("spark.graft.scan.minPartitions")
-      .map(_.toInt).getOrElse(spark.sparkContext.defaultParallelism)
-    if (target > 1 && scanPartitions(df).forall(_ < target)) df.repartition(target)
+    val target = df.sparkSession.sparkContext.defaultParallelism
+    if (target > 1 && scanPartitions(df).getOrElse(df.rdd.getNumPartitions) < target)
+      df.repartition(target)
     else df
   }
+
+  /** Test access to the gate's estimate (TablesSpec parity pin). */
+  private[graft] def scanPartitionsForTest(df: DataFrame): Option[Int] =
+    scanPartitions(df)
 
   /** Scan-partition count of a frame whose leaves are all file scans,
     * computed from file-index metadata alone: Spark's split-packing
     * algebra (FilePartition.maxSplitBytes + getFilePartitions' greedy
     * bin close) replayed over the listed file sizes. None when any leaf
-    * is not a HadoopFsRelation — [[spreadDf]] then repartitions
-    * unconditionally, which only over-spreads a non-scan frame (safe;
-    * every production call site feeds a parquet read).
+    * is not a HadoopFsRelation — [[spreadDf]] then asks the frame's RDD,
+    * so a non-scan frame is spread only when it is narrower than the
+    * floor, never shrunk.
     */
-  /** Test access to the gate's estimate (TablesSpec parity pin). */
-  private[graft] def scanPartitionsForTest(df: DataFrame): Option[Int] =
-    scanPartitions(df)
-
   private def scanPartitions(df: DataFrame): Option[Int] = {
     import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
     val leaves = df.queryExecution.analyzed.collectLeaves()

@@ -540,10 +540,7 @@ object Dedup {
           // are file-backed (no cache entry), local ones persist internally
           if (reliable) step.checkpoint() else step.localCheckpoint()
         else step.persist(StorageLevel.MEMORY_AND_DISK)
-      val t0 = System.nanoTime()
       converged = updated.filter(col("comp2") < col("comp")).count() == 0
-      if (sys.env.contains("GRAFT_CC_LOG"))
-        System.err.println(f"[cc] round $round ${(System.nanoTime() - t0) / 1e9}%.2f s converged=$converged")
       prop.unpersist() // updated is materialized; drop the round's halves
       cached.unpersist() // updated is materialized; drop the parent round
       cached = updated

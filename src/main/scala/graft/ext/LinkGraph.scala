@@ -51,7 +51,7 @@ object LinkGraph {
     * HTML quoting forms. Evaluates identically under Java regex and RE2
     * (`\b`, ASCII classes, no lookaround, no backreferences).
     */
-  private[ext] val aOpenRe = s"(?is)<a\\b$attrRegion>"
+  private val aOpenRe = s"(?is)<a\\b$attrRegion>"
 
   /** One attribute's value from a tag's attribute region: double-
     * quoted, single-quoted, or unquoted (all three are real-HTML norm —
@@ -75,7 +75,7 @@ object LinkGraph {
     s"COALESCE($dq, $sq, $uq)"
   }
 
-  private[ext] def hrefOfAttrs(attrs: Column): Column = attrOf(attrs, "href")
+  private def hrefOfAttrs(attrs: Column): Column = attrOf(attrs, "href")
 
   private[ext] def hrefOfAttrsDuck(e: String): String = attrOfDuck(e, "href")
 
@@ -97,7 +97,7 @@ object LinkGraph {
     */
   private val nofollowRe = s"(?is)(^|$wsCls)nofollow($wsCls|$$)"
 
-  private[ext] def nofollowOfAttrs(attrs: Column): Column =
+  private def nofollowOfAttrs(attrs: Column): Column =
     coalesce(attrOf(attrs, "rel").rlike(nofollowRe), lit(false))
 
   private[ext] def nofollowOfAttrsDuck(e: String): String =

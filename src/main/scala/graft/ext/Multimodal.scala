@@ -216,6 +216,8 @@ object Multimodal {
     * bright (≥128) pixels. Exact integers so the result is
     * partitioning-independent and hash-checkable; reads the raster's
     * stored samples directly (no getRGB color-profile conversion).
+    * Content that is not a decodable image fails the task with an
+    * IllegalArgumentException naming the row's doc_id.
     */
   def decodePngStats(media: Dataset[MediaRow]): Dataset[PixelStats] = {
     import media.sparkSession.implicits._
@@ -230,10 +232,12 @@ object Multimodal {
       rows.map { r =>
         val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
           new java.io.ByteArrayInputStream(r.content))
-        reader.setInput(iis, true)
-        val img = reader.read(0)
-        iis.close()
-        require(img != null, s"doc ${r.doc_id}: content is not a decodable image")
+        val img =
+          try { reader.setInput(iis, true); reader.read(0) }
+          catch { case e: java.io.IOException =>
+            throw new IllegalArgumentException(
+              s"doc ${r.doc_id}: content is not a decodable image", e) }
+          finally iis.close()
         val raster = img.getRaster
         val w = img.getWidth
         val h = img.getHeight

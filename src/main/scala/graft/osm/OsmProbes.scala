@@ -34,19 +34,24 @@ object OsmProbes {
 
   @volatile private var materializedBy: String = null
 
-  /** One-time (per JVM) ETL + parquet write: XML fixture → node / node_tags /
-    * ways / ways_nodes / ways_tags (+ raw_tags for the Step-1 audits).
-    */
+  /** One-time (per JVM) ETL + parquet write of [[writeTables]]. */
   private def materialize(s: SparkSession): Unit = synchronized {
     if (materializedBy != oracleDir) {
-      val t = OsmPipeline.process(s, fixturePath, cache = true)
-      OsmPipeline.writeParquet(t, oracleDir)
-      OsmQueries.rawTags(
-          OsmPipeline.readNodesRaw(s, fixturePath), OsmPipeline.readWaysRaw(s, fixturePath))
-        .coalesce(1).write.mode("overwrite").parquet(s"$oracleDir/raw_tags")
-      t.nodes.unpersist(); t.ways.unpersist() // process(cache=true) persisted the raw scans
+      writeTables(s, oracleDir)
       materializedBy = oracleDir
     }
+  }
+
+  /** XML fixture → node / node_tags / ways / ways_nodes / ways_tags (+
+    * raw_tags for the Step-1 audits) as parquet under `dir`. Uncached: the
+    * fixture is 1.6 KB, so re-parsing it per table costs less than a
+    * persisted scan that outlives the write.
+    */
+  private[graft] def writeTables(s: SparkSession, dir: String): Unit = {
+    OsmPipeline.writeParquet(OsmPipeline.process(s, fixturePath), dir)
+    OsmQueries.rawTags(
+        OsmPipeline.readNodesRaw(s, fixturePath), OsmPipeline.readWaysRaw(s, fixturePath))
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/raw_tags")
   }
 
   /** Read-back of the materialized tables: the Spark side of every probe

@@ -52,6 +52,18 @@ class MultimodalSpec extends SparkSuite {
     assert(got.nonEmpty)
   }
 
+  test("undecodable PNG content fails with IllegalArgumentException naming the doc") {
+    import spark.implicits._
+    val bad = Multimodal.MediaRow(7L, "not an image at all".getBytes,
+      Multimodal.MediaMeta("image/png", 19L, "deadbeef"))
+    val e = intercept[org.apache.spark.SparkException] {
+      Multimodal.decodePngStats(Seq(bad).toDS()).collect()
+    }
+    val cause = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case c: IllegalArgumentException => c }
+    assert(cause.exists(_.getMessage.contains("doc 7:")), s"no doc-naming cause in $e")
+  }
+
   test("resizeStub preserves ids and carries requested dimensions") {
     val out = Multimodal.resizeStub(Multimodal.mediaTable(spark, dir), 224, 224)
       .collect()

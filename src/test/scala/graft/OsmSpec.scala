@@ -151,6 +151,16 @@ class OsmSpec extends SparkSuite {
     }
   }
 
+  test("writing the oracle tables leaves no XML scan cached") {
+    val cm = spark.sharedState.cacheManager
+    cm.clearCache()
+    val dir = java.nio.file.Files.createTempDirectory("osm_oracle").toString
+    OsmProbes.writeTables(spark, dir)
+    assert(spark.read.parquet(s"$dir/nodes").count() == 2)
+    assert(spark.read.parquet(s"$dir/raw_tags").count() > 0)
+    assert(cm.isEmpty, "writeTables left a cached plan behind")
+  }
+
   test("XML sink round-trip: write nodes as XML, read them back") {
     val dir = java.nio.file.Files.createTempDirectory("osm_xml_out").toString
     t.nodes.select(

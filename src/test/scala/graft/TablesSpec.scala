@@ -61,9 +61,18 @@ class TablesSpec extends SparkSuite {
     // local fixture is below the floor -> the gate must still spread
     val out = Tables.spreadDf(Tables(spark, sfDir, "documents"))
     assert(out.queryExecution.logical.toString.contains("Repartition"))
-    // a non-scan frame falls back to unconditional spread, never throws
+    // a non-scan frame falls back to its RDD partition count, never throws:
+    // a narrow one is spread to the floor, a wide one is never shrunk
     val local = Seq(1L, 2L).toDF("x")
     assert(Tables.spreadDf(local).rdd.getNumPartitions >= 2)
+    val floor = spark.sparkContext.defaultParallelism
+    assert(floor > 1 && floor < 64) // precondition: the gate is live at all
+    val wide = Tables.spreadDf(spark.range(0, 1000, 1, 64).toDF())
+    assert(!wide.queryExecution.logical.toString.contains("Repartition"))
+    assert(wide.rdd.getNumPartitions == 64)
+    val narrow = Tables.spreadDf(spark.range(0, 1000, 1, 1).toDF())
+    assert(narrow.rdd.getNumPartitions == floor)
+    assert(narrow.count() == 1000)
   }
 
   test("both encodings yield identical wall-clock instants") {
